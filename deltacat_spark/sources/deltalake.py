@@ -32,7 +32,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 import uuid
 from typing import Any, Callable
@@ -40,6 +39,14 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from deltacat_spark.catalog.io import (
+    HIVE_NULL,
+    cluster_for_write,
+    column_stats,
+    one_file_per_key,
+    stage_write,
+    staging_dir,
+)
 from deltacat_spark.localdf import local_df
 
 LOG_DIR = "_delta_log"
@@ -633,7 +640,7 @@ def _hive_quote(v: str | None) -> str:
     from urllib.parse import quote
 
     if v is None:
-        return "__HIVE_DEFAULT_PARTITION__"
+        return HIVE_NULL
     return quote(v, safe="")
 
 
@@ -1161,88 +1168,43 @@ def _stage_files(
     `_change_data`), partition-relative layout preserved — readers
     never see them until the log commit. Returns add-shaped dicts
     (path/partitionValues/size/modificationTime/dataChange/stats)."""
-    staging = os.path.join(root, f".staging-{uuid.uuid4().hex[:12]}")
-    writer = df.write.mode("overwrite").option(
-        "maxRecordsPerFile", max_records_per_file
-    )
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(staging)
-
     adds: list[dict] = []
     now_ms = int(time.time() * 1000)
-    seen_names: set[str] = set()
-    for dirpath, _, files in sorted(os.walk(staging)):
-        for fname in sorted(files):
-            if not fname.endswith(".parquet"):
-                continue
-            src = os.path.join(dirpath, fname)
-            rel_dir = os.path.relpath(dirpath, staging)
-            rel_dir = "" if rel_dir == "." else rel_dir
-            # partitionBy reuses one task filename across partition
-            # dirs; basenames stay unique table-wide for sanity
-            if fname in seen_names:
-                fname = f"d{len(adds):05d}-{fname}"
-            seen_names.add(fname)
-            rel = os.path.join(rel_dir, fname) if rel_dir else fname
+    with staging_dir(
+        os.path.join(root, f".staging-{uuid.uuid4().hex[:12]}")
+    ) as staging:
+        for sf in stage_write(df, staging, part_cols, max_records_per_file):
+            rel = os.path.relpath(sf.path, staging)
             if prefix:
                 rel = os.path.join(prefix, rel)
             dst = os.path.join(root, rel)
             os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(src, dst)
-            pv = _partition_values(rel_dir)
-            stats = _delta_stats(dst)
-            if stats.get("numRecords") == 0:
-                os.remove(dst)
-                continue
+            os.replace(sf.path, dst)
             adds.append(
                 {
                     "path": rel.replace(os.sep, "/"),
-                    "partitionValues": pv,
-                    "size": os.path.getsize(dst),
+                    "partitionValues": sf.nullable_partition_values(),
+                    "size": sf.size,
                     "modificationTime": now_ms,
                     "dataChange": True,
-                    "stats": json.dumps(stats),
+                    "stats": json.dumps(_delta_stats(sf.metadata)),
                 }
             )
-    shutil.rmtree(staging, ignore_errors=True)
     return adds
 
 
-def _partition_values(rel_dir: str) -> dict[str, str | None]:
-    from urllib.parse import unquote
-
-    out: dict[str, str | None] = {}
-    if not rel_dir:
-        return out
-    for seg in rel_dir.split(os.sep):
-        if "=" in seg:
-            k, v = seg.split("=", 1)
-            out[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
-    return out
-
-
-def _delta_stats(path: str) -> dict[str, Any]:
+def _delta_stats(md) -> dict[str, Any]:
     """Per-file stats in Delta's JSON shape (numRecords + min/max/null
-    counts for top-level stats-typed columns) from the parquet footer."""
-    from deltacat_spark.catalog.io import _footer_stats
-
-    fs = _footer_stats(path)
-    out: dict[str, Any] = {"numRecords": fs.get("records", 0)}
-    mins: dict[str, Any] = {}
-    maxs: dict[str, Any] = {}
-    nulls: dict[str, int] = {}
-    for col, mm in (fs.get("stats") or {}).items():
-        if "min" in mm:
-            mins[col] = mm["min"]
-            maxs[col] = mm["max"]
-        if "nulls" in mm:
-            nulls[col] = mm["nulls"]
-    if mins:
-        out["minValues"] = mins
-        out["maxValues"] = maxs
-    if nulls:
-        out["nullCount"] = nulls
+    counts for top-level stats-typed columns) from a parquet footer
+    (`pyarrow.parquet.FileMetaData`)."""
+    stats = column_stats(md)
+    out: dict[str, Any] = {"numRecords": md.num_rows}
+    for key, kind in (
+        ("minValues", "min"), ("maxValues", "max"), ("nullCount", "nulls")
+    ):
+        vals = {c: mm[kind] for c, mm in stats.items() if kind in mm}
+        if vals:
+            out[key] = vals
     return out
 
 
@@ -1906,69 +1868,37 @@ def optimize_delta(
         F.regexp_replace(F.col("_metadata.file_path"), "^file:/*", "/"),
     )
     pmap = local_df(spark, pairs, "__src string, __pk string")
-    staging = os.path.join(root, f".staging-{uuid.uuid4().hex[:12]}")
-    (
-        src.join(F.broadcast(pmap), "__src")
-        .drop("__src")
-        # explicit count: see the iceberg/hudi fanout note (AQE
-        # would coalesce the small shuffle to one serial write task)
-        .repartition(
-            spark.sparkContext.defaultParallelism, "__pk"
-        )
-        .write.mode("overwrite")
-        .partitionBy("__pk")
-        .parquet(staging)
-    )
-
-    from urllib.parse import unquote
-
     now_ms = int(time.time() * 1000)
     adds = []
-    for d in sorted(os.listdir(staging)):
-        if not d.startswith("__pk="):
-            continue
-        key = unquote(d.split("=", 1)[1])
-        rel_dir = os.path.dirname(todo[key][0]["path"])
-        fname = f"part-opt-{uuid.uuid4().hex[:12]}.parquet"
-        rel = os.path.join(rel_dir, fname) if rel_dir else fname
-        dst = os.path.join(root, rel)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        files = [
-            f
-            for f in sorted(os.listdir(os.path.join(staging, d)))
-            if f.endswith(".parquet")
-        ]
-        if len(files) == 1:
-            os.replace(os.path.join(staging, d, files[0]), dst)
-        else:  # hash-collided task splits: merge driver-side (bounded
-            # by one partition's rows)
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            pq.write_table(
-                pa.concat_tables(
-                    pq.read_table(os.path.join(staging, d, f))
-                    for f in files
-                ),
-                dst,
-            )
-        stats = _delta_stats(dst)
-        if stats.get("numRecords") == 0:
-            os.remove(dst)
-            continue
-        adds.append(
-            {
-                "add": {
-                    "path": rel.replace(os.sep, "/"),
-                    "partitionValues": json.loads(key),
-                    "size": os.path.getsize(dst),
-                    "modificationTime": now_ms,
-                    "dataChange": False,
-                    "stats": json.dumps(stats),
-                }
-            }
+    with staging_dir(
+        os.path.join(root, f".staging-{uuid.uuid4().hex[:12]}")
+    ) as staging:
+        staged = stage_write(
+            cluster_for_write(
+                src.join(F.broadcast(pmap), "__src").drop("__src"), ["__pk"]
+            ),
+            staging,
+            ["__pk"],
         )
-    shutil.rmtree(staging, ignore_errors=True)
+        for key, sf in one_file_per_key(staged, "__pk").items():
+            rel_dir = os.path.dirname(todo[key][0]["path"])
+            fname = f"part-opt-{uuid.uuid4().hex[:12]}.parquet"
+            rel = os.path.join(rel_dir, fname) if rel_dir else fname
+            dst = os.path.join(root, rel)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.replace(sf.path, dst)
+            adds.append(
+                {
+                    "add": {
+                        "path": rel.replace(os.sep, "/"),
+                        "partitionValues": json.loads(key),
+                        "size": sf.size,
+                        "modificationTime": now_ms,
+                        "dataChange": False,
+                        "stats": json.dumps(_delta_stats(sf.metadata)),
+                    }
+                }
+            )
 
     actions: list[dict] = list(adds)
     for fs in todo.values():

@@ -61,14 +61,21 @@ union in unshuffled); MoR upsert appends logs without reading bases.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
-import shutil
 import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from deltacat_spark.catalog.io import (
+    StagedFile,
+    cluster_for_write,
+    one_file_per_key,
+    stage_write,
+    staging_dir,
+)
 from deltacat_spark.localdf import local_df
 
 HOODIE_DIR = ".hoodie"
@@ -486,6 +493,71 @@ def read_hudi_incremental(
 # ---------------------------------------------------------------------------
 
 
+_TOKEN = "0-0-0"
+
+
+def _new_group(partition: str, instant: str) -> tuple[str, str, str]:
+    """(file id, partition, file name) of the NEW file group `instant`
+    opens in `partition`. The id is a digest of (partition path,
+    instant): deterministic, so a write names the group's file with the
+    `_new_group_file_name` expression and the landing step re-derives
+    the same id from the staged directory name — no collect of distinct
+    partitions before the write. No "_" in the id: `__fid` extraction
+    splits the file name on underscores."""
+    fid = hashlib.md5(f"{partition}\x00{instant}".encode()).hexdigest() + "-0"
+    return fid, partition, f"{fid}_{_TOKEN}_{instant}.parquet"
+
+
+def _new_group_file_name(instant: str):
+    """Spark expression of `_new_group`'s file name for each row's
+    `_hoodie_partition_path`."""
+    return F.concat(
+        F.md5(
+            F.concat_ws(
+                "\x00", F.col("_hoodie_partition_path"), F.lit(instant)
+            )
+        ),
+        F.lit(f"-0_{_TOKEN}_{instant}.parquet"),
+    )
+
+
+def _land_staged(
+    root: str,
+    staged: list[StagedFile],
+    instant: str,
+    targets: dict[str, tuple[str, str, str]] | None = None,
+    write_stats: dict[str, list[dict]] | None = None,
+) -> dict[str, list[dict]]:
+    """Move each file staged under `__pp=<key>` to its Hudi slice file
+    and record its write stat; returns the stats by partition path
+    (added to `write_stats` when given). `targets` maps a key to (file
+    id, partition, file name); any other key is a partition path that
+    opens a new file group (`_new_group`)."""
+    stats = {} if write_stats is None else write_stats
+    for key, sf in one_file_per_key(staged, "__pp").items():
+        fid, partition, fname = (targets or {}).get(key) or _new_group(
+            key, instant
+        )
+        rel = f"{partition}/{fname}" if partition else fname
+        dst = os.path.join(root, rel)
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.replace(sf.path, dst)
+        stats.setdefault(partition, []).append(
+            {
+                "fileId": fid,
+                "path": rel,
+                "numWrites": sf.metadata.num_rows,
+                "fileSizeInBytes": sf.size,
+                "prevCommit": "null",
+            }
+        )
+    return stats
+
+
+def _staging(root: str) -> str:
+    return os.path.join(root, HOODIE_DIR, f".tmp-{uuid.uuid4().hex[:8]}")
+
+
 def write_hudi(
     df: DataFrame,
     root: str,
@@ -701,56 +773,6 @@ def write_hudi(
     write_stats: dict[str, list[dict]] = {}
     replaced_fids: dict[str, list[str]] = {}  # fully-deleted CoW groups
 
-    def _land_staged(
-        staging: str, fname_by_key: dict[str, str],
-        part_by_key: dict[str, str], fid_by_key: dict[str, str],
-    ) -> None:
-        """Move each `__pp=<key>` staged dir to its hudi slice file and
-        record write stats. Hash-collided task splits merge driver-side
-        (bounded: one file group's rows)."""
-        from urllib.parse import unquote
-
-        import pyarrow.parquet as pq
-
-        for d in sorted(os.listdir(staging)):
-            if not d.startswith("__pp="):
-                continue
-            key = unquote(d.split("=", 1)[1])
-            partition = part_by_key[key]
-            fname = fname_by_key[key]
-            rel = f"{partition}/{fname}" if partition else fname
-            dst = os.path.join(root, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            files = [
-                f
-                for f in sorted(os.listdir(os.path.join(staging, d)))
-                if f.endswith(".parquet")
-            ]
-            if len(files) == 1:
-                os.replace(os.path.join(staging, d, files[0]), dst)
-            else:
-                import pyarrow as pa
-
-                tables = [
-                    pq.read_table(os.path.join(staging, d, f))
-                    for f in files
-                ]
-                pq.write_table(pa.concat_tables(tables), dst)
-            n = pq.read_metadata(dst).num_rows
-            if n == 0:
-                os.remove(dst)
-                continue
-            write_stats.setdefault(partition, []).append(
-                {
-                    "fileId": fid_by_key[key],
-                    "path": rel,
-                    "numWrites": n,
-                    "fileSizeInBytes": os.path.getsize(dst),
-                    "prevCommit": "null",
-                }
-            )
-        shutil.rmtree(staging, ignore_errors=True)
-
     # 1) rewrite touched file groups — ONE Spark job for ALL groups:
     # scan every touched slice at once (kept rows retain their original
     # commit time/seqno — hudi's contract, it is what makes incremental
@@ -761,10 +783,9 @@ def write_hudi(
     spark = df.sparkSession
     handled_keys = None
     fused_write = False
-    token = "0-0-0"
     if rewrite_groups:
         fname_by_fid = {
-            s["file_id"]: f"{s['file_id']}_{token}_{instant}.parquet"
+            s["file_id"]: f"{s['file_id']}_{_TOKEN}_{instant}.parquet"
             for s in rewrite_groups
         }
         part_by_fid = {s["file_id"]: s["partition"] for s in rewrite_groups}
@@ -851,19 +872,13 @@ def write_hudi(
             [(fid, fname_by_fid[fid]) for fid in fname_by_fid],
             "__fid string, __rw_name string",
         )
-        new_fname_expr = F.concat(
-            F.md5(
-                F.concat_ws(
-                    "\x00", F.col("_hoodie_partition_path"), F.lit(instant)
-                )
-            ),
-            F.lit(f"-0_{token}_{instant}.parquet"),
-        )
         staged = (
             merged.join(F.broadcast(fname_map), "__fid", "left")
             .withColumn(
                 "_hoodie_file_name",
-                F.coalesce(F.col("__rw_name"), new_fname_expr),
+                F.coalesce(
+                    F.col("__rw_name"), _new_group_file_name(instant)
+                ),
             )
             .withColumn(
                 "__pp",
@@ -879,49 +894,22 @@ def write_hudi(
                 "_hoodie_commit_seqno",
                 F.coalesce(F.col("_hoodie_commit_seqno"), new_seqno),
             )
-            # Explicit partition count: a bare repartition(col) lets
-            # AQE coalesce this few-MB shuffle into ONE partition and
-            # the whole fanout write serializes in a single task
-            # (job-profiled: 0.8s of a 2.3s commit). Each __pp key
-            # still hashes to exactly one task, so every staged dir
-            # still lands a single file; cluster-width tasks just
-            # write the dirs in parallel.
-            .repartition(
-                spark.sparkContext.defaultParallelism, "__pp"
+        )
+        staged = cluster_for_write(staged, ["__pp"]).select(
+            *(META_COLS + data_cols), "__pp"
+        )
+        # dirs keyed by a PARTITION PATH hold new file groups
+        with staging_dir(_staging(root)) as staging:
+            _land_staged(
+                root,
+                stage_write(staged, staging, ["__pp"]),
+                instant,
+                {
+                    fn: (fid, part_by_fid[fid], fn)
+                    for fid, fn in fname_by_fid.items()
+                },
+                write_stats,
             )
-        )
-        cols = META_COLS + data_cols
-        staging = os.path.join(
-            root, HOODIE_DIR, f".tmp-{uuid.uuid4().hex[:8]}"
-        )
-        staged.select(*cols, "__pp").write.mode("overwrite").partitionBy(
-            "__pp"
-        ).parquet(staging)
-        fname_by_key = {fname_by_fid[f]: fname_by_fid[f]
-                        for f in fname_by_fid}
-        part_by_key = {fname_by_fid[f]: part_by_fid[f]
-                       for f in fname_by_fid}
-        fid_by_key = {fname_by_fid[f]: f for f in fname_by_fid}
-        if os.path.isdir(staging):
-            # dirs keyed by a PARTITION PATH hold new file groups whose
-            # id is the deterministic digest the expression baked in
-            import hashlib as _hashlib
-            from urllib.parse import unquote as _unq
-
-            for d in os.listdir(staging):
-                if not d.startswith("__pp="):
-                    continue
-                key = _unq(d.split("=", 1)[1])
-                if key in fname_by_key:
-                    continue  # a rewrite file
-                fid = (
-                    _hashlib.md5(f"{key}\x00{instant}".encode()).hexdigest()
-                    + "-0"
-                )
-                fname_by_key[key] = f"{fid}_{token}_{instant}.parquet"
-                part_by_key[key] = key
-                fid_by_key[key] = fid
-        _land_staged(staging, fname_by_key, part_by_key, fid_by_key)
         if deleting:
             # a group whose every row was deleted lands no file and no
             # write stat — without retiring it, file_slices would keep
@@ -969,253 +957,213 @@ def write_hudi(
             }
         part_by_fid = {s["file_id"]: s["partition"] for s in mor_targets}
         cols = META_COLS + [c for c in df.columns]
-        staging = os.path.join(
-            root, HOODIE_DIR, f".tmp-{uuid.uuid4().hex[:8]}"
-        )
-        if log_format != "hoodie":
-            # FUSED parquet path: one left join decides log-append vs
-            # new-file-group per row; one fanout write lands both.
-            fname_map = local_df(
-                spark,
-                [(fid, fn) for fid, fn in log_fname_by_fid.items()],
-                "__fid string, __log_name string",
-            )
-            joined = incoming.join(
-                F.broadcast(mor_key_loc),
-                (incoming["_hoodie_record_key"] == F.col("__k"))
-                & (incoming["_hoodie_partition_path"] == F.col("__p")),
-                "left",
-            )
-            if deleting:
-                # unmatched delete keys are no-ops, never new groups
-                joined = joined.filter(F.col("__fid").isNotNull())
-            new_fname_expr = F.concat(
-                F.md5(
-                    F.concat_ws(
-                        "\x00",
-                        F.col("_hoodie_partition_path"),
-                        F.lit(instant),
-                    )
-                ),
-                F.lit(f"-0_0-0-0_{instant}.parquet"),
-            )
-            staged = (
-                joined.join(F.broadcast(fname_map), "__fid", "left")
-                .withColumn(
-                    "_hoodie_file_name",
-                    F.coalesce(F.col("__log_name"), new_fname_expr),
+        with staging_dir(_staging(root)) as staging:
+            if log_format != "hoodie":
+                # FUSED parquet path: one left join decides log-append vs
+                # new-file-group per row; one fanout write lands both.
+                fname_map = local_df(
+                    spark,
+                    [(fid, fn) for fid, fn in log_fname_by_fid.items()],
+                    "__fid string, __log_name string",
                 )
-                .withColumn(
-                    "__pp",
-                    F.coalesce(
-                        F.col("__log_name"),
-                        F.col("_hoodie_partition_path"),
-                    ),
+                joined = incoming.join(
+                    F.broadcast(mor_key_loc),
+                    (incoming["_hoodie_record_key"] == F.col("__k"))
+                    & (incoming["_hoodie_partition_path"] == F.col("__p")),
+                    "left",
                 )
-                .withColumn("_hoodie_commit_time", F.lit(instant))
-                .withColumn(
-                    "_hoodie_commit_seqno",
-                    F.concat_ws(
-                        "_",
-                        F.lit(instant),
-                        F.monotonically_increasing_id().cast("string"),
-                    ),
-                )
-                # explicit count: see the CoW fanout note — bare
-                # repartition(col) gets AQE-coalesced to one task and
-                # serializes the fanout write
-                .repartition(
-                    spark.sparkContext.defaultParallelism, "__pp"
-                )
-            )
-            staged.select(*cols, "__pp").write.mode(
-                "overwrite"
-            ).partitionBy("__pp").parquet(staging)
-            # landing maps: log names are driver-known; a dir keyed by
-            # a PARTITION PATH holds a new file group whose id is the
-            # same deterministic digest the expression above baked in
-            from urllib.parse import unquote as _unq
-
-            import hashlib as _hashlib
-
-            fname_by_key = {fn: fn for fn in log_fname_by_fid.values()}
-            part_by_key = {
-                fn: part_by_fid[fid]
-                for fid, fn in log_fname_by_fid.items()
-            }
-            fid_by_key = {
-                fn: fid for fid, fn in log_fname_by_fid.items()
-            }
-            if os.path.isdir(staging):
-                for d in os.listdir(staging):
-                    if not d.startswith("__pp="):
-                        continue
-                    key = _unq(d.split("=", 1)[1])
-                    if key in fname_by_key:
-                        continue  # a log append
-                    fid = (
-                        _hashlib.md5(f"{key}\x00{instant}".encode())
-                        .hexdigest()
-                        + "-0"
-                    )
-                    fname_by_key[key] = f"{fid}_0-0-0_{instant}.parquet"
-                    part_by_key[key] = key
-                    fid_by_key[key] = fid
-            _land_staged(staging, fname_by_key, part_by_key, fid_by_key)
-            handled_keys = None
-            fused_write = True
-        else:
-            matched = incoming.join(
-                F.broadcast(mor_key_loc),
-                (incoming["_hoodie_record_key"] == F.col("__k"))
-                & (incoming["_hoodie_partition_path"] == F.col("__p")),
-            )
-            fname_map = local_df(
-                spark,
-                [(fid, fn) for fid, fn in log_fname_by_fid.items()],
-                "__fid string, _hoodie_file_name string",
-            )
-            # No repartition here: both hoodie-format consumers below
-            # are groupBy("_hoodie_file_name").applyInPandas, whose own
-            # hash exchange clusters the rows (fname↔fid is 1:1), so a
-            # pre-repartition on __fid would shuffle the matched batch
-            # TWICE (job-profiled r15: one redundant Exchange per
-            # framed-log commit). The parquet path keeps its
-            # repartition("__pp") — partitionBy needs one task per
-            # group so each staged dir lands a single file. The seqno
-            # project sits below the first exchange either way, so
-            # monotonically_increasing_id values are unchanged.
-            staged = (
-                matched.join(F.broadcast(fname_map), "__fid")
-                .withColumn("_hoodie_commit_time", F.lit(instant))
-                .withColumn(
-                    "_hoodie_commit_seqno",
-                    F.concat_ws(
-                        "_",
-                        F.lit(instant),
-                        F.monotonically_increasing_id().cast("string"),
-                    ),
-                )
-            )
-        if log_format == "hoodie" and deleting:
-            # frame one real DELETE block per file group ON EXECUTORS
-            # — the avro v3 HoodieDeleteRecordList payload external
-            # Hudi readers apply as hard deletes
-            sel = staged.select(
-                "_hoodie_file_name",
-                "_hoodie_record_key",
-                "_hoodie_partition_path",
-            )
-            os.makedirs(staging, exist_ok=True)
-            stg, inst = staging, instant
-
-            def _frame_deletes(pdf):
-                import os as _os
-
-                import pandas as _pd
-
-                from deltacat_spark.sources import hudi_log as _hl
-
-                fname = pdf["_hoodie_file_name"].iloc[0]
-                deletes = [
-                    {"recordKey": k, "partitionPath": p}
-                    for k, p in zip(
-                        pdf["_hoodie_record_key"],
-                        pdf["_hoodie_partition_path"],
-                    )
-                ]
-                _hl.append_delete_block(
-                    _os.path.join(stg, fname), deletes, inst
-                )
-                return _pd.DataFrame(
-                    {"fname": [fname], "n": [len(deletes)]}
-                )
-
-            landed = (
-                sel.groupBy("_hoodie_file_name")
-                .applyInPandas(_frame_deletes, "fname string, n long")
-                .collect()
-            )
-        elif log_format == "hoodie":
-            # frame one AVRO_DATA block per file group ON EXECUTORS
-            # (applyInPandas keyed by the new log name), land + stat
-            # driver-side like the parquet path — still one
-            # distributed job, O(incoming) write cost
-            from deltacat_spark.sources.avrofile import avro_schema_for
-
-            sel = staged.select(*cols)  # META_COLS carries the log name
-            schema_json = json.dumps(
-                avro_schema_for(
-                    staged.select(*cols).schema, "hoodie_record"
-                )
-            )
-            os.makedirs(staging, exist_ok=True)
-            stg, inst, data_cols_f = staging, instant, list(cols)
-
-            def _frame_group(pdf):
-                import json as _json
-                import os as _os
-
-                import pandas as _pd
-                import pyarrow as _pa
-
-                from deltacat_spark.sources import hudi_log as _hl
-
-                fname = pdf["_hoodie_file_name"].iloc[0]
-                rows = _pa.Table.from_pandas(
-                    pdf[data_cols_f], preserve_index=False
-                ).to_pylist()
-                _hl.append_avro_data_block(
-                    _os.path.join(stg, fname),
-                    rows,
-                    _json.loads(schema_json),
-                    inst,
-                )
-                return _pd.DataFrame({"fname": [fname], "n": [len(rows)]})
-
-            landed = (
-                sel.groupBy("_hoodie_file_name")
-                .applyInPandas(_frame_group, "fname string, n long")
-                .collect()
-            )
-        if log_format == "hoodie":
-            # land the executor-framed blocks + record write stats
-            # (shared by the AVRO_DATA and DELETE branches)
-            fid_by_fname = {
-                fn: fid for fid, fn in log_fname_by_fid.items()
-            }
-            for r in landed:
-                fid = fid_by_fname[r["fname"]]
-                partition = part_by_fid[fid]
-                rel = (
-                    f"{partition}/{r['fname']}" if partition else r["fname"]
-                )
-                dst = os.path.join(root, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.replace(os.path.join(stg, r["fname"]), dst)
-                st = {
-                    "fileId": fid,
-                    "path": rel,
-                    "numWrites": 0 if deleting else int(r["n"]),
-                    "fileSizeInBytes": os.path.getsize(dst),
-                    "prevCommit": "null",
-                }
                 if deleting:
-                    st["numDeletes"] = int(r["n"])
-                write_stats.setdefault(partition, []).append(st)
-            shutil.rmtree(staging, ignore_errors=True)
-            # identical key set to matched's output keys — read from the
-            # checkpointed location map, not the incoming ⋈ map join
-            handled_keys = mor_key_loc.select(
-                F.col("__k").alias("_hoodie_record_key"),
-                F.col("__p").alias("_hoodie_partition_path"),
-            )
+                    # unmatched delete keys are no-ops, never new groups
+                    joined = joined.filter(F.col("__fid").isNotNull())
+                staged = (
+                    joined.join(F.broadcast(fname_map), "__fid", "left")
+                    .withColumn(
+                        "_hoodie_file_name",
+                        F.coalesce(
+                            F.col("__log_name"), _new_group_file_name(instant)
+                        ),
+                    )
+                    .withColumn(
+                        "__pp",
+                        F.coalesce(
+                            F.col("__log_name"),
+                            F.col("_hoodie_partition_path"),
+                        ),
+                    )
+                    .withColumn("_hoodie_commit_time", F.lit(instant))
+                    .withColumn(
+                        "_hoodie_commit_seqno",
+                        F.concat_ws(
+                            "_",
+                            F.lit(instant),
+                            F.monotonically_increasing_id().cast("string"),
+                        ),
+                    )
+                )
+                # log names are driver-known; a dir keyed by a PARTITION
+                # PATH holds a new file group
+                staged = cluster_for_write(staged, ["__pp"])
+                _land_staged(
+                    root,
+                    stage_write(
+                        staged.select(*cols, "__pp"), staging, ["__pp"]
+                    ),
+                    instant,
+                    {
+                        fn: (fid, part_by_fid[fid], fn)
+                        for fid, fn in log_fname_by_fid.items()
+                    },
+                    write_stats,
+                )
+                fused_write = True
+            else:
+                matched = incoming.join(
+                    F.broadcast(mor_key_loc),
+                    (incoming["_hoodie_record_key"] == F.col("__k"))
+                    & (incoming["_hoodie_partition_path"] == F.col("__p")),
+                )
+                fname_map = local_df(
+                    spark,
+                    [(fid, fn) for fid, fn in log_fname_by_fid.items()],
+                    "__fid string, _hoodie_file_name string",
+                )
+                # No repartition here: both hoodie-format consumers below
+                # are groupBy("_hoodie_file_name").applyInPandas, whose own
+                # hash exchange clusters the rows (fname↔fid is 1:1), so a
+                # pre-repartition on __fid would shuffle the matched batch
+                # TWICE (job-profiled r15: one redundant Exchange per
+                # framed-log commit). The parquet path keeps its
+                # cluster_for_write on __pp — partitionBy needs one task
+                # per group so each staged dir lands a single file. The seqno
+                # project sits below the first exchange either way, so
+                # monotonically_increasing_id values are unchanged.
+                staged = (
+                    matched.join(F.broadcast(fname_map), "__fid")
+                    .withColumn("_hoodie_commit_time", F.lit(instant))
+                    .withColumn(
+                        "_hoodie_commit_seqno",
+                        F.concat_ws(
+                            "_",
+                            F.lit(instant),
+                            F.monotonically_increasing_id().cast("string"),
+                        ),
+                    )
+                )
+            if log_format == "hoodie" and deleting:
+                # frame one real DELETE block per file group ON EXECUTORS
+                # — the avro v3 HoodieDeleteRecordList payload external
+                # Hudi readers apply as hard deletes
+                sel = staged.select(
+                    "_hoodie_file_name",
+                    "_hoodie_record_key",
+                    "_hoodie_partition_path",
+                )
+                os.makedirs(staging, exist_ok=True)
+                stg, inst = staging, instant
 
+                def _frame_deletes(pdf):
+                    import os as _os
+
+                    import pandas as _pd
+
+                    from deltacat_spark.sources import hudi_log as _hl
+
+                    fname = pdf["_hoodie_file_name"].iloc[0]
+                    deletes = [
+                        {"recordKey": k, "partitionPath": p}
+                        for k, p in zip(
+                            pdf["_hoodie_record_key"],
+                            pdf["_hoodie_partition_path"],
+                        )
+                    ]
+                    _hl.append_delete_block(
+                        _os.path.join(stg, fname), deletes, inst
+                    )
+                    return _pd.DataFrame(
+                        {"fname": [fname], "n": [len(deletes)]}
+                    )
+
+                landed = (
+                    sel.groupBy("_hoodie_file_name")
+                    .applyInPandas(_frame_deletes, "fname string, n long")
+                    .collect()
+                )
+            elif log_format == "hoodie":
+                # frame one AVRO_DATA block per file group ON EXECUTORS
+                # (applyInPandas keyed by the new log name), land + stat
+                # driver-side like the parquet path — still one
+                # distributed job, O(incoming) write cost
+                from deltacat_spark.sources.avrofile import avro_schema_for
+
+                sel = staged.select(*cols)  # META_COLS carries the log name
+                schema_json = json.dumps(
+                    avro_schema_for(
+                        staged.select(*cols).schema, "hoodie_record"
+                    )
+                )
+                os.makedirs(staging, exist_ok=True)
+                stg, inst, data_cols_f = staging, instant, list(cols)
+
+                def _frame_group(pdf):
+                    import json as _json
+                    import os as _os
+
+                    import pandas as _pd
+                    import pyarrow as _pa
+
+                    from deltacat_spark.sources import hudi_log as _hl
+
+                    fname = pdf["_hoodie_file_name"].iloc[0]
+                    rows = _pa.Table.from_pandas(
+                        pdf[data_cols_f], preserve_index=False
+                    ).to_pylist()
+                    _hl.append_avro_data_block(
+                        _os.path.join(stg, fname),
+                        rows,
+                        _json.loads(schema_json),
+                        inst,
+                    )
+                    return _pd.DataFrame({"fname": [fname], "n": [len(rows)]})
+
+                landed = (
+                    sel.groupBy("_hoodie_file_name")
+                    .applyInPandas(_frame_group, "fname string, n long")
+                    .collect()
+                )
+            if log_format == "hoodie":
+                # land the executor-framed blocks + record write stats
+                # (shared by the AVRO_DATA and DELETE branches)
+                fid_by_fname = {
+                    fn: fid for fid, fn in log_fname_by_fid.items()
+                }
+                for r in landed:
+                    fname = r["fname"]
+                    fid = fid_by_fname[fname]
+                    partition = part_by_fid[fid]
+                    rel = f"{partition}/{fname}" if partition else fname
+                    dst = os.path.join(root, rel)
+                    os.makedirs(os.path.dirname(dst), exist_ok=True)
+                    os.replace(os.path.join(stg, fname), dst)
+                    st = {
+                        "fileId": fid,
+                        "path": rel,
+                        "numWrites": 0 if deleting else int(r["n"]),
+                        "fileSizeInBytes": os.path.getsize(dst),
+                        "prevCommit": "null",
+                    }
+                    if deleting:
+                        st["numDeletes"] = int(r["n"])
+                    write_stats.setdefault(partition, []).append(st)
+                # identical key set to matched's output keys — read from the
+                # checkpointed location map, not the incoming ⋈ map join
+                handled_keys = mor_key_loc.select(
+                    F.col("__k").alias("_hoodie_record_key"),
+                    F.col("__p").alias("_hoodie_partition_path"),
+                )
     # 2) remaining rows → new file groups, ONE Spark job (fanout write):
-    # pre-assign a fileId per partition value (the map is
-    # partition-count-sized, broadcast), bake the meta columns, write
-    # with partitionBy, then move each staged file to its hudi name.
-    # Clustering on the partition path keeps one file per new group.
+    # bake the meta columns, write with partitionBy, then move each
+    # staged file to its hudi name. Clustering on the partition path
+    # keeps one file per new group.
     remaining = incoming
     if handled_keys is not None:
         remaining = incoming.join(
@@ -1225,27 +1173,14 @@ def write_hudi(
         )
     if not deleting and not fused_write:
         # unmatched delete keys are no-ops, never new groups; the fused
-        # MoR parquet write above already landed its new groups
-        # fileId for a new group = digest of (partition path, instant):
-        # deterministic, so the file name is a Spark EXPRESSION — no
+        # MoR parquet write above already landed its new groups.
+        # The file name is a Spark EXPRESSION (`_new_group`) — no
         # driver collect of distinct partitions and no broadcast of a
         # partition→name map before the write (one whole Spark job less
-        # per commit); the landing step re-derives the same ids from the
-        # staged directory names. No "_" in the id — `__fid` extraction
-        # splits the file name on underscores.
-        token = "0-0-0"
-        fid_expr = F.concat(
-            F.md5(
-                F.concat_ws(
-                    "\x00", F.col("_hoodie_partition_path"), F.lit(instant)
-                )
-            ),
-            F.lit("-0"),
-        )
+        # per commit).
         staged = (
             remaining.withColumn(
-                "_hoodie_file_name",
-                F.concat(fid_expr, F.lit(f"_{token}_{instant}.parquet")),
+                "_hoodie_file_name", _new_group_file_name(instant)
             )
             .withColumn("_hoodie_commit_time", F.lit(instant))
             .withColumn(
@@ -1256,49 +1191,22 @@ def write_hudi(
                     F.monotonically_increasing_id().cast("string"),
                 ),
             )
-            # explicit count: see the CoW fanout note — bare
-            # repartition(col) gets AQE-coalesced to one task on
-            # small commits and serializes the fanout write
-            .repartition(
-                spark.sparkContext.defaultParallelism,
-                "_hoodie_partition_path",
-            )
         )
         cols = META_COLS + [c for c in df.columns]
-        staging = os.path.join(
-            root, HOODIE_DIR, f".tmp-{uuid.uuid4().hex[:8]}"
-        )
         # partition on a COPY: `_hoodie_partition_path` itself must stay
         # a data column inside the files (hudi's meta-column contract)
-        staged.select(*cols).withColumn(
-            "__pp", F.col("_hoodie_partition_path")
-        ).write.mode("overwrite").partitionBy("__pp").parquet(staging)
-        import hashlib
-        from urllib.parse import unquote
-
-        parts = sorted(
-            unquote(d.split("=", 1)[1])
-            for d in os.listdir(staging)
-            if d.startswith("__pp=")
+        staged = (
+            cluster_for_write(staged, ["_hoodie_partition_path"])
+            .select(*cols)
+            .withColumn("__pp", F.col("_hoodie_partition_path"))
         )
-        if parts:
-            fid_by_part = {
-                p: hashlib.md5(f"{p}\x00{instant}".encode()).hexdigest()
-                + "-0"
-                for p in parts
-            }
-            fname_by_part = {
-                p: f"{fid}_{token}_{instant}.parquet"
-                for p, fid in fid_by_part.items()
-            }
+        with staging_dir(_staging(root)) as staging:
             _land_staged(
-                staging,
-                fname_by_key=fname_by_part,
-                part_by_key={p: p for p in parts},
-                fid_by_key=fid_by_part,
+                root,
+                stage_write(staged, staging, ["__pp"]),
+                instant,
+                write_stats=write_stats,
             )
-        else:
-            shutil.rmtree(staging, ignore_errors=True)
 
     meta = {
         "partitionToWriteStats": write_stats,
@@ -1378,9 +1286,8 @@ def compact_hudi(
     if not todo:
         return None
     instant = _next_instant(root)
-    token = "0-0-0"
     fname_by_fid = {
-        s["file_id"]: f"{s['file_id']}_{token}_{instant}.parquet"
+        s["file_id"]: f"{s['file_id']}_{_TOKEN}_{instant}.parquet"
         for s in todo
     }
     part_by_fid = {s["file_id"]: s["partition"] for s in todo}
@@ -1390,7 +1297,13 @@ def compact_hudi(
         for p in ([s["path"]] if s["path"] else []) + s["log_paths"]:
             fmap_rows.append((os.path.basename(p), s["file_id"]))
             rels.append(p)
-    raw = (
+    # ONE exchange for the whole fold: every version of a record key
+    # lives in its key's file group, so clustering by __fid up front
+    # both satisfies the LWW window's distribution (HashPartitioning on
+    # a subset of the window keys) AND is the clustering the per-group
+    # write below needs — the former key-window + fname-repartition
+    # shape paid two exchanges.
+    raw = cluster_for_write(
         _scan_data_files(
             spark,
             root,
@@ -1406,16 +1319,8 @@ def compact_hudi(
             ),
             "__fname",
         )
-        .drop("__fname")
-        # ONE exchange for the whole fold: every version of a record
-        # key lives in its key's file group, so clustering by __fid
-        # up front both satisfies the LWW window's distribution
-        # (HashPartitioning on a subset of the window keys) AND is the
-        # clustering the per-group write below needs — the former
-        # key-window + fname-repartition shape paid two exchanges.
-        # Explicit count so AQE cannot coalesce the small shuffle to
-        # one task and serialize the fold + per-group write.
-        .repartition(spark.sparkContext.defaultParallelism, "__fid")
+        .drop("__fname"),
+        ["__fid"],
     )
     from pyspark.sql.window import Window
 
@@ -1444,53 +1349,20 @@ def compact_hudi(
         .withColumn("_hoodie_file_name", F.col("__new_name"))
         .drop("__new_name", "__fid")
     )
-    staging = os.path.join(root, HOODIE_DIR, f".tmp-{uuid.uuid4().hex[:8]}")
-    staged.withColumn(
-        "__pp", F.col("_hoodie_file_name")
-    ).write.mode("overwrite").partitionBy("__pp").parquet(staging)
-
-    write_stats: dict[str, list[dict]] = {}
-    from urllib.parse import unquote
-
-    import pyarrow.parquet as pq
-
-    fid_by_fname = {fn: fid for fid, fn in fname_by_fid.items()}
-    for d in sorted(os.listdir(staging)):
-        if not d.startswith("__pp="):
-            continue
-        fname = unquote(d.split("=", 1)[1])
-        fid = fid_by_fname[fname]
-        partition = part_by_fid[fid]
-        rel = f"{partition}/{fname}" if partition else fname
-        dst = os.path.join(root, rel)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        files = [
-            f
-            for f in sorted(os.listdir(os.path.join(staging, d)))
-            if f.endswith(".parquet")
-        ]
-        if len(files) == 1:
-            os.replace(os.path.join(staging, d, files[0]), dst)
-        else:
-            import pyarrow as pa
-
-            pq.write_table(
-                pa.concat_tables(
-                    pq.read_table(os.path.join(staging, d, f))
-                    for f in files
-                ),
-                dst,
-            )
-        write_stats.setdefault(partition, []).append(
+    with staging_dir(_staging(root)) as staging:
+        write_stats = _land_staged(
+            root,
+            stage_write(
+                staged.withColumn("__pp", F.col("_hoodie_file_name")),
+                staging,
+                ["__pp"],
+            ),
+            instant,
             {
-                "fileId": fid,
-                "path": rel,
-                "numWrites": pq.read_metadata(dst).num_rows,
-                "fileSizeInBytes": os.path.getsize(dst),
-                "prevCommit": "null",
-            }
+                fn: (fid, part_by_fid[fid], fn)
+                for fid, fn in fname_by_fid.items()
+            },
         )
-    shutil.rmtree(staging, ignore_errors=True)
     return _finish_commit(
         root,
         instant,
@@ -1534,10 +1406,9 @@ def cluster_hudi(
     if not todo:
         return None
     instant = _next_instant(root)
-    token = "0-0-0"
     fid_by_part = {p: str(uuid.uuid4()) for p in todo}
     fname_by_part = {
-        p: f"{fid}_{token}_{instant}.parquet"
+        p: f"{fid}_{_TOKEN}_{instant}.parquet"
         for p, fid in fid_by_part.items()
     }
     all_paths = [
@@ -1549,62 +1420,19 @@ def cluster_hudi(
         [(p, fname_by_part[p]) for p in todo],
         "_hoodie_partition_path string, __new_name string",
     )
-    staged = (
+    staged = cluster_for_write(
         old.join(F.broadcast(pmap), "_hoodie_partition_path")
         .withColumn("_hoodie_file_name", F.col("__new_name"))
-        .drop("__new_name")
-        # explicit count: see the CoW fanout note
-        .repartition(
-            spark.sparkContext.defaultParallelism,
-            "_hoodie_partition_path",
+        .drop("__new_name"),
+        ["_hoodie_partition_path"],
+    ).withColumn("__pp", F.col("_hoodie_partition_path"))
+    with staging_dir(_staging(root)) as staging:
+        write_stats = _land_staged(
+            root,
+            stage_write(staged, staging, ["__pp"]),
+            instant,
+            {p: (fid_by_part[p], p, fname_by_part[p]) for p in todo},
         )
-    )
-    staging = os.path.join(root, HOODIE_DIR, f".tmp-{uuid.uuid4().hex[:8]}")
-    staged.withColumn(
-        "__pp", F.col("_hoodie_partition_path")
-    ).write.mode("overwrite").partitionBy("__pp").parquet(staging)
-
-    write_stats: dict[str, list[dict]] = {}
-    from urllib.parse import unquote
-
-    import pyarrow.parquet as pq
-
-    for d in sorted(os.listdir(staging)):
-        if not d.startswith("__pp="):
-            continue
-        partition = unquote(d.split("=", 1)[1])
-        fname = fname_by_part[partition]
-        rel = f"{partition}/{fname}" if partition else fname
-        dst = os.path.join(root, rel)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        files = [
-            f
-            for f in sorted(os.listdir(os.path.join(staging, d)))
-            if f.endswith(".parquet")
-        ]
-        if len(files) == 1:
-            os.replace(os.path.join(staging, d, files[0]), dst)
-        else:
-            import pyarrow as pa
-
-            pq.write_table(
-                pa.concat_tables(
-                    pq.read_table(os.path.join(staging, d, f))
-                    for f in files
-                ),
-                dst,
-            )
-        write_stats.setdefault(partition, []).append(
-            {
-                "fileId": fid_by_part[partition],
-                "path": rel,
-                "numWrites": pq.read_metadata(dst).num_rows,
-                "fileSizeInBytes": os.path.getsize(dst),
-                "prevCommit": "null",
-            }
-        )
-    shutil.rmtree(staging, ignore_errors=True)
-
     meta = {
         "partitionToWriteStats": write_stats,
         "partitionToReplaceFileIds": {
@@ -1613,17 +1441,7 @@ def cluster_hudi(
         "compacted": True,
         "operationType": "CLUSTER",
     }
-    tmp = os.path.join(root, HOODIE_DIR, f"{instant}.replacecommit.tmp")
-    final = os.path.join(root, HOODIE_DIR, f"{instant}.replacecommit")
-    with open(tmp, "w") as f:
-        json.dump(meta, f, indent=2)
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
-        os.remove(tmp)
-        raise RuntimeError(f"concurrent Hudi commit at instant {instant}")
-    os.remove(tmp)
-    return instant
+    return _finish_commit(root, instant, meta, kind="replacecommit")
 
 
 def clean_hudi(root: str, keep_instants: int = 1) -> list[str]:

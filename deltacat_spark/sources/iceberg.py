@@ -64,6 +64,11 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from deltacat_spark.catalog.io import (
+    cluster_for_write,
+    stage_write,
+    staging_dir,
+)
 from deltacat_spark.localdf import local_df
 
 from deltacat_spark.sources import avrofile
@@ -543,13 +548,10 @@ _BOUNDS_MAX_COLS = 32  # manifests stay small even for very wide tables
 
 
 def _file_bounds_spec(
-    path: str, finfo: dict[str, tuple[int, str]]
+    md, finfo: dict[str, tuple[int, str]]
 ) -> tuple[list[dict] | None, list[dict] | None]:
     """Spec bounds maps ([{key: field-id, value: bytes}], lower/upper)
-    from the parquet footer statistics of a data file."""
-    import pyarrow.parquet as pq
-
-    md = pq.read_metadata(path)
+    from a data file's parquet footer (`pyarrow.parquet.FileMetaData`)."""
     mins: dict[str, Any] = {}
     maxs: dict[str, Any] = {}
     bad: set[str] = set()
@@ -2095,7 +2097,6 @@ def write_iceberg(
 
     # ---- data files (fanout partitionBy: every file single-valued) ----
     commit_uuid = uuid.uuid4().hex[:12]
-    staging = os.path.join(root, DATA_DIR, f".staging-{commit_uuid}")
     out = df
     _assert_utc_for_temporal_transforms(df.sparkSession, specs, finfo)
     for sp in specs:
@@ -2108,23 +2109,8 @@ def write_iceberg(
             out = out.withColumn(
                 sp["name"], _transform_column(sp, finfo[sp["source"]][1])
             )
-    # explicit count: a bare repartition(cols) gets AQE-coalesced to
-    # one task on small writes and serializes the partitionBy fanout
-    # (each key still hashes to one task, so per-dir file counts are
-    # unchanged at any scale)
-    out = (
-        out.repartition(
-            out.sparkSession.sparkContext.defaultParallelism, *part_cols
-        )
-        if part_cols
-        else out
-    )
-    writer = out.write.mode("overwrite").option(
-        "maxRecordsPerFile", max_records_per_file
-    )
     if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(staging)
+        out = cluster_for_write(out, part_cols)
 
     spark_types = {f.name: f.dataType.typeName() for f in df.schema.fields}
 
@@ -2158,43 +2144,23 @@ def write_iceberg(
     now_ms = int(time.time() * 1000)
     snapshot_id = int.from_bytes(os.urandom(7), "big")
     seq = (prev_meta["last-sequence-number"] + 1) if existed else 1
-    import pyarrow.parquet as pq
-    from urllib.parse import unquote
-
-    idx = 0
-    for dirpath, _, files in sorted(os.walk(staging)):
-        pv_raw: dict[str, str | None] = {}
-        rel_dir = os.path.relpath(dirpath, staging)
-        if rel_dir != ".":
-            for seg in rel_dir.split(os.sep):
-                if "=" in seg:
-                    k, v = seg.split("=", 1)
-                    pv_raw[k] = (
-                        None
-                        if v == "__HIVE_DEFAULT_PARTITION__"
-                        else unquote(v)
-                    )
-        for fname in sorted(files):
-            if not fname.endswith(".parquet"):
-                continue
-            src = os.path.join(dirpath, fname)
+    with staging_dir(
+        os.path.join(root, DATA_DIR, f".staging-{commit_uuid}")
+    ) as staging:
+        staged = stage_write(out, staging, part_cols, max_records_per_file)
+        for idx, sf in enumerate(staged):
             rel = f"{DATA_DIR}/{commit_uuid}-{idx:05d}.parquet"
-            dst = os.path.join(root, rel)
-            os.replace(src, dst)
-            md = pq.read_metadata(dst)
-            if md.num_rows == 0:
-                os.remove(dst)
-                continue
-            lo, hi = _file_bounds_spec(dst, finfo)
+            os.replace(sf.path, os.path.join(root, rel))
+            lo, hi = _file_bounds_spec(sf.metadata, finfo)
             data_file = {
                 "content": 0,
                 "file_path": rel,
                 "file_format": "PARQUET",
                 "partition": _typed_partition(
-                    pv_raw, part_cols, part_types
+                    sf.nullable_partition_values(), part_cols, part_types
                 ),
-                "record_count": md.num_rows,
-                "file_size_in_bytes": os.path.getsize(dst),
+                "record_count": sf.metadata.num_rows,
+                "file_size_in_bytes": sf.size,
                 "lower_bounds": lo,
                 "upper_bounds": hi,
             }
@@ -2207,10 +2173,6 @@ def write_iceberg(
                     "data_file": data_file,
                 }
             )
-            idx += 1
-    import shutil
-
-    shutil.rmtree(staging, ignore_errors=True)
 
     # v3 ROW LINEAGE (r14): every new data file gets an explicit
     # first_row_id block carved out of the table's next-row-id counter
@@ -3168,75 +3130,24 @@ def commit_position_deletes(
             f"{meta.get('format-version')}"
         )
     commit_uuid = uuid.uuid4().hex[:12]
-    rel = f"{DATA_DIR}/{commit_uuid}-deletes.parquet"
-    staging = os.path.join(root, DATA_DIR, f".staging-{commit_uuid}")
-    (
-        deletes.select(
-            F.col("file_path").cast("string"), F.col("pos").cast("long")
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(staging)
-    )
-    part = [
-        f for f in sorted(os.listdir(staging)) if f.endswith(".parquet")
-    ]
-    os.replace(os.path.join(staging, part[0]), os.path.join(root, rel))
-    import shutil
-
-    shutil.rmtree(staging, ignore_errors=True)
-    import pyarrow.parquet as pq
-
-    n = pq.read_metadata(os.path.join(root, rel)).num_rows
-
     snapshot_id = int.from_bytes(os.urandom(7), "big")
     seq = meta["last-sequence-number"] + 1
-    entry_schema = _manifest_entry_schema([])
-    entries = [
-        {
-            "status": 1,
-            "snapshot_id": snapshot_id,
-            "sequence_number": seq,
-            "file_sequence_number": seq,
-            "data_file": {
-                "content": 1,  # POSITION_DELETES
-                "file_path": rel,
-                "file_format": "PARQUET",
-                "partition": {},
-                "record_count": n,
-                "file_size_in_bytes": os.path.getsize(
-                    os.path.join(root, rel)
-                ),
-                "lower_bounds": None,
-                "upper_bounds": None,
-            },
-        }
-    ]
-    manifest_rel = f"{METADATA_DIR}/{commit_uuid}-m0.avro"
-    manifest_path = os.path.join(root, manifest_rel)
-    avrofile.write_container(manifest_path, entry_schema, entries)
-    delete_manifest = {
-        "manifest_path": manifest_rel,
-        "manifest_length": os.path.getsize(manifest_path),
+    delete_manifests = _write_delete_manifest(
+        root,
+        deletes.select(
+            F.col("file_path").cast("string"), F.col("pos").cast("long")
+        ),
+        commit_uuid,
+        snapshot_id,
+        seq,
         # external readers type the partition tuple by this id: an
         # unpartitioned (empty-tuple) delete manifest needs a spec with
         # NO fields, which is spec 0 only on unpartitioned tables —
         # register/reuse an empty spec otherwise
-        "partition_spec_id": _spec_id_for_identity_fields(
-            meta, current_schema(meta), []
-        ),
-        "content": 1,
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": 1,
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": n,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-    manifests = [delete_manifest] + _carry_forward_manifests(
+        _spec_id_for_identity_fields(meta, current_schema(meta), []),
+        {"content": 1},  # POSITION_DELETES
+    )
+    manifests = delete_manifests + _carry_forward_manifests(
         tbl, meta, drop_equality=drop_equality, commit_uuid=commit_uuid
     )
     return _commit_snapshot(
@@ -3249,6 +3160,71 @@ def commit_position_deletes(
         operation="delete",
         commit_uuid=commit_uuid,
     )
+
+
+def _write_delete_manifest(
+    root: str,
+    deletes: DataFrame,
+    commit_uuid: str,
+    snapshot_id: int,
+    seq: int,
+    spec_id: int,
+    data_file: dict,
+    partition_fields: list[dict] | None = None,
+) -> list[dict]:
+    """Write `deletes` as ONE delete file plus the manifest that adds
+    it; returns [manifest], or [] when there is nothing to delete.
+    `data_file` carries the entry's content-type fields."""
+    kind = "eq-deletes" if data_file["content"] == 2 else "deletes"
+    rel = f"{DATA_DIR}/{commit_uuid}-{kind}.parquet"
+    with staging_dir(
+        os.path.join(root, DATA_DIR, f".staging-{commit_uuid}")
+    ) as staging:
+        staged = stage_write(deletes.coalesce(1), staging)
+        if not staged:
+            return []
+        os.replace(staged[0].path, os.path.join(root, rel))
+    n = staged[0].metadata.num_rows
+    entry = {
+        "status": 1,
+        "snapshot_id": snapshot_id,
+        "sequence_number": seq,
+        "file_sequence_number": seq,
+        "data_file": {
+            "file_path": rel,
+            "file_format": "PARQUET",
+            "partition": {},
+            "record_count": n,
+            "file_size_in_bytes": staged[0].size,
+            "lower_bounds": None,
+            "upper_bounds": None,
+            **data_file,
+        },
+    }
+    manifest_rel = f"{METADATA_DIR}/{commit_uuid}-m0.avro"
+    manifest_path = os.path.join(root, manifest_rel)
+    avrofile.write_container(
+        manifest_path,
+        _manifest_entry_schema(partition_fields or []),
+        [entry],
+    )
+    return [
+        {
+            "manifest_path": manifest_rel,
+            "manifest_length": os.path.getsize(manifest_path),
+            "partition_spec_id": spec_id,
+            "content": 1,
+            "sequence_number": seq,
+            "min_sequence_number": seq,
+            "added_snapshot_id": snapshot_id,
+            "added_files_count": 1,
+            "existing_files_count": 0,
+            "deleted_files_count": 0,
+            "added_rows_count": n,
+            "existing_rows_count": 0,
+            "deleted_rows_count": 0,
+        }
+    ]
 
 
 def _carry_forward_manifests(
@@ -3385,69 +3361,28 @@ def commit_equality_deletes(
     equality_ids = [finfo[c][0] for c in deletes.columns]
 
     commit_uuid = uuid.uuid4().hex[:12]
-    rel = f"{DATA_DIR}/{commit_uuid}-eq-deletes.parquet"
-    staging = os.path.join(root, DATA_DIR, f".staging-{commit_uuid}")
-    deletes.coalesce(1).write.mode("overwrite").parquet(staging)
-    part = [
-        f for f in sorted(os.listdir(staging)) if f.endswith(".parquet")
-    ]
-    os.replace(os.path.join(staging, part[0]), os.path.join(root, rel))
-    import shutil
-
-    shutil.rmtree(staging, ignore_errors=True)
-    import pyarrow.parquet as pq
-
-    n = pq.read_metadata(os.path.join(root, rel)).num_rows
-
     snapshot_id = int.from_bytes(os.urandom(7), "big")
     seq = meta["last-sequence-number"] + 1
-    entries = [
-        {
-            "status": 1,
-            "snapshot_id": snapshot_id,
-            "sequence_number": seq,
-            "file_sequence_number": seq,
-            "data_file": {
-                "content": 2,  # EQUALITY_DELETES
-                "file_path": rel,
-                "file_format": "PARQUET",
-                "partition": partition,
-                "record_count": n,
-                "file_size_in_bytes": os.path.getsize(
-                    os.path.join(root, rel)
-                ),
-                "lower_bounds": None,
-                "upper_bounds": None,
-                "equality_ids": equality_ids,
-            },
-        }
-    ]
-    manifest_rel = f"{METADATA_DIR}/{commit_uuid}-m0.avro"
-    manifest_path = os.path.join(root, manifest_rel)
-    avrofile.write_container(
-        manifest_path, _manifest_entry_schema(partition_fields), entries
-    )
-    delete_manifest = {
-        "manifest_path": manifest_rel,
-        "manifest_length": os.path.getsize(manifest_path),
+    delete_manifests = _write_delete_manifest(
+        root,
+        deletes,
+        commit_uuid,
+        snapshot_id,
+        seq,
         # resolve (or register) the spec that matches the scope columns
         # — external readers type the partition tuple by this id, so
         # spec 0 would misread a partition-scoped delete manifest
-        "partition_spec_id": _spec_id_for_identity_fields(
+        _spec_id_for_identity_fields(
             meta, ice_schema, [f["name"] for f in partition_fields]
         ),
-        "content": 1,
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": 1,
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": n,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-    manifests = [delete_manifest] + tbl.manifests(tbl.snapshot(meta))
+        {
+            "content": 2,  # EQUALITY_DELETES
+            "partition": partition,
+            "equality_ids": equality_ids,
+        },
+        partition_fields,
+    )
+    manifests = delete_manifests + tbl.manifests(tbl.snapshot(meta))
     return _commit_snapshot(
         tbl,
         meta,

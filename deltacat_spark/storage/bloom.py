@@ -2,7 +2,7 @@
 
 The reference ships a primary-key index (`utils/primary_key_index.py` —
 SHA-1 digests hashed into bucketed indexes) so point reads don't touch
-every file. min/max footer stats (``catalog/io.py:_footer_stats``) can't
+every file. min/max footer stats (``catalog/io.py:column_stats``) can't
 skip on high-cardinality keys whose values span every file's range; a
 per-file bloom can. Design:
 

@@ -54,3 +54,20 @@ class TestLocalDf:
     def test_generator_input(self, spark):
         got = local_df(spark, ((i,) for i in range(5)), "i long")
         assert sorted(r.i for r in got.collect()) == [0, 1, 2, 3, 4]
+
+    def test_dict_rows(self, spark):
+        rows = [{"a": "x", "b": "y"}, {"a": "z", "b": None}]
+        ref = spark.createDataFrame(rows, "a string, b string")
+        got = local_df(spark, rows, "a string, b string")
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, ref.collect())
+        ) == [("x", "y"), ("z", None)]
+
+    def test_nan_stays_nan(self, spark):
+        rows = [(1, float("nan")), (2, 1.5), (3, None)]
+        got = {
+            r.k: r.v
+            for r in local_df(spark, rows, "k long, v double").collect()
+        }
+        assert got[1] != got[1]  # NaN, not NULL
+        assert got[2] == 1.5 and got[3] is None
